@@ -7,8 +7,8 @@ incremental: a keyed stream of points flows into per-key bounded state
 reference's unbounded ``Push`` growth is a bug we do not reproduce), and
 every micro-batch emits the refreshed anomaly probability per key touched.
 
-Implementation: ``transformWithStateInPandas`` (Spark 4.x StatefulProcessor)
-with a ValueState holding the (ts, tiebreak, value) window. Per-key compute
+Implementation: ``applyInPandasWithState`` with a GroupState holding the
+(ts, tiebreak, value) window. Per-key compute
 is the same seeded NumPy kernel as batch ``detect`` (anomalyzer_spark.oracle)
 — batch and stream agree bit-for-bit on identical input, which is the
 equivalence test's assertion.
@@ -22,16 +22,13 @@ deviation; the reference has no notion of event time at all.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -44,65 +41,8 @@ from .. import oracle
 from ..config import AnomalyzerConf
 
 
-class _DetectProcessor(StatefulProcessor):
-    """Per-key bounded window state + eval on every batch."""
-
-    def __init__(self, conf: AnomalyzerConf, n_keys: int,
-                 state_ttl_ms: int | None = None):
-        self.conf = conf
-        self.n_keys = n_keys
-        self.state_ttl_ms = state_ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.window = handle.getValueState(
-            "window",
-            StructType([
-                StructField("ts", ArrayType(LongType())),
-                StructField("tb", ArrayType(LongType())),
-                StructField("value", ArrayType(DoubleType())),
-                StructField("total_seen", LongType()),
-            ]),
-            ttlDurationMs=self.state_ttl_ms,
-        )
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-    ) -> Iterator[pd.DataFrame]:
-        conf = self.conf
-        new = pd.concat(list(rows), ignore_index=True)
-        if self.window.exists():
-            ts0, tb0, val0, seen0 = self.window.get()
-            ts = np.concatenate([np.asarray(ts0, np.int64), new["ts"].to_numpy(np.int64)])
-            tb = np.concatenate([np.asarray(tb0, np.int64), new["tb"].to_numpy(np.int64)])
-            val = np.concatenate([np.asarray(val0, np.float64),
-                                  new["value"].to_numpy(np.float64)])
-            seen = int(seen0) + len(new)
-        else:
-            ts = new["ts"].to_numpy(np.int64)
-            tb = new["tb"].to_numpy(np.int64)
-            val = new["value"].to_numpy(np.float64)
-            seen = len(new)
-
-        ts, tb, val, out_pdf = _merge_and_eval(conf, self.n_keys, key, ts, tb, val, seen)
-        self.window.update((ts.tolist(), tb.tolist(), val.tolist(), seen))
-        yield out_pdf
-
-    def close(self) -> None:
-        pass
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs a working protobuf at the Python
-    worker; fall back to applyInPandasWithState when it's absent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
 def _merge_and_eval(conf, n_keys, key, ts, tb, val, seen):
-    """Shared per-key merge → sort → truncate → eval (both state APIs)."""
+    """Per-key merge → sort → truncate → eval of one key's window."""
     order = np.lexsort((tb, ts))[-conf.window_size:]
     ts, tb, val = ts[order], tb[order], val[order]
     kstr = "|".join(str(k) for k in key[:n_keys])
@@ -124,7 +64,6 @@ def detect_stream(
     value_col: str = "value",
     conf: AnomalyzerConf | None = None,
     tiebreak_col: str | None = None,
-    impl: str = "auto",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming ``detect``: one output row per key per micro-batch.
@@ -135,11 +74,6 @@ def detect_stream(
     ``total_seen`` is the cumulative point count (use the max row per key
     for the final state of a drained stream).
 
-    ``impl``: 'tws' (transformWithStateInPandas, Spark 4 StatefulProcessor),
-    'apply' (applyInPandasWithState, Spark 3.4+), or 'auto' (tws when its
-    protobuf dependency is importable, else apply). Both paths share the
-    same merge/eval kernel and emit identical results.
-
     ``state_ttl_ms``: drop a key's window state this long after its last
     update (processing time). At unbounded key cardinality (100 TB streams:
     user ids, session ids) state must expire or the store grows forever —
@@ -147,8 +81,6 @@ def detect_stream(
     series. None = keep state indefinitely.
     """
     conf = conf or AnomalyzerConf()
-    if impl == "auto":
-        impl = "tws" if _tws_available() else "apply"
     from ..timeutil import epoch_us_col
 
     ts_expr = epoch_us_col(df, ts_col)
@@ -172,58 +104,46 @@ def detect_stream(
     )
     n_keys = len(keys)
 
-    if impl == "tws":
-        out = prepared.groupBy(*keys).transformWithStateInPandas(
-            statefulProcessor=_DetectProcessor(conf, n_keys, state_ttl_ms),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="ProcessingTime" if state_ttl_ms else "None",
-        )
-    else:
-        state_schema = StructType([
-            StructField("ts", ArrayType(LongType())),
-            StructField("tb", ArrayType(LongType())),
-            StructField("value", ArrayType(DoubleType())),
-            StructField("total_seen", LongType()),
-        ])
+    state_schema = StructType([
+        StructField("ts", ArrayType(LongType())),
+        StructField("tb", ArrayType(LongType())),
+        StructField("value", ArrayType(DoubleType())),
+        StructField("total_seen", LongType()),
+    ])
 
-        ttl = state_ttl_ms
+    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        new = pd.concat(list(pdfs), ignore_index=True)
+        if state.exists:
+            ts0, tb0, val0, seen0 = state.get
+            ts = np.concatenate([np.asarray(ts0, np.int64),
+                                 new["ts"].to_numpy(np.int64)])
+            tb = np.concatenate([np.asarray(tb0, np.int64),
+                                 new["tb"].to_numpy(np.int64)])
+            val = np.concatenate([np.asarray(val0, np.float64),
+                                  new["value"].to_numpy(np.float64)])
+            seen = int(seen0) + len(new)
+        else:
+            ts = new["ts"].to_numpy(np.int64)
+            tb = new["tb"].to_numpy(np.int64)
+            val = new["value"].to_numpy(np.float64)
+            seen = len(new)
+        ts, tb, val, out_pdf = _merge_and_eval(conf, n_keys, key, ts, tb, val, seen)
+        state.update((ts.tolist(), tb.tolist(), val.tolist(), seen))
+        if state_ttl_ms:
+            state.setTimeoutDuration(state_ttl_ms)
+        yield out_pdf
 
-        def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-            if state.hasTimedOut:
-                state.remove()
-                return
-            new = pd.concat(list(pdfs), ignore_index=True)
-            if state.exists:
-                ts0, tb0, val0, seen0 = state.get
-                ts = np.concatenate([np.asarray(ts0, np.int64),
-                                     new["ts"].to_numpy(np.int64)])
-                tb = np.concatenate([np.asarray(tb0, np.int64),
-                                     new["tb"].to_numpy(np.int64)])
-                val = np.concatenate([np.asarray(val0, np.float64),
-                                      new["value"].to_numpy(np.float64)])
-                seen = int(seen0) + len(new)
-            else:
-                ts = new["ts"].to_numpy(np.int64)
-                tb = new["tb"].to_numpy(np.int64)
-                val = new["value"].to_numpy(np.float64)
-                seen = len(new)
-            ts, tb, val, out_pdf = _merge_and_eval(conf, n_keys, key, ts, tb, val, seen)
-            state.update((ts.tolist(), tb.tolist(), val.tolist(), seen))
-            if ttl:
-                state.setTimeoutDuration(ttl)
-            yield out_pdf
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        out = prepared.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if ttl
-                         else GroupStateTimeout.NoTimeout),
-        )
+    out = prepared.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="Update",
+        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if state_ttl_ms
+                     else GroupStateTimeout.NoTimeout),
+    )
     return out.select(
         *[F.col(f"k{i}").alias(k) for i, k in enumerate(keys)],
         "n_points", "last_ts", "total_seen", "prob",

@@ -27,12 +27,11 @@ member arrives (same-batch pairs resolve through the just-written store),
 and verification is the identical expression — pinned in
 tests/test_dhash_stream.py for multiple batch splits and arrival orders.
 
-State & files are bounded exactly as minhash_stream's store
-(``retention_batches`` horizon eviction + ``compact_every`` generational
-folding — the shared helpers implement the same crash-safe manifest
-protocol). Store rows are blocks-per-image × in-horizon corpus; ``pfx``
-(block_val low bits) partitions the store so the broadcast join's dynamic
-partition pruning skips untouched files.
+State & files are bounded by ``retention_batches`` / ``compact_every``;
+the store layout and crash protocol are ``_store``'s. Store rows are
+blocks-per-image × in-horizon corpus; ``pfx`` (block_val low bits)
+partitions the store so the broadcast join's dynamic partition pruning
+skips untouched files.
 """
 
 from __future__ import annotations
@@ -43,11 +42,17 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import dhash_image
-from .minhash_stream import (_compact_component, _read_component,
-                             _sweep_live)
+from . import _store
 
 __all__ = ["dhash_dedup_stream", "dhash_pairs_store",
            "run_dhash_stream_on_dir"]
+
+
+_PAIR_SCHEMA = StructType([
+    StructField("id_a", LongType()),
+    StructField("id_b", LongType()),
+    StructField("hamming", LongType()),
+])
 
 
 def _block_schema(id_col: str) -> StructType:
@@ -81,14 +86,13 @@ def dhash_dedup_stream(
     stream. Returns the started StreamingQuery; read accumulated pairs
     with ``dhash_pairs_store``. Image ids must be unique across the
     stream (the minhash_stream contract)."""
-    blocks_dir = f"{store_dir}/blocks"
-    pairs_dir = f"{store_dir}/pairs"
+    block_schema = _block_schema(id_col)
+    schemas = {"blocks": block_schema, "pairs": _PAIR_SCHEMA}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        min_live = (batch_id - retention_batches + 1
-                    if retention_batches is not None else None)
+        min_live = _store.oldest_live(batch_id, retention_batches)
         sigs = (
             dhash_image(batch_df.select(F.col(id_col), F.col(content_col)),
                         content_col, id_col)
@@ -100,15 +104,13 @@ def dhash_dedup_stream(
             .withColumn("pfx", F.pmod(F.col("block_val"), F.lit(64)))
         # 1. extend the store first (replay-idempotent overwrite; lets
         #    same-batch pairs resolve through the store read)
-        (bk.write.mode("overwrite").partitionBy("pfx")
-         .parquet(f"{blocks_dir}/batch_id={batch_id}"))
-        block_schema = _block_schema(id_col)
+        _store.write_batch(bk, store_dir, "blocks", batch_id, ("pfx",))
         # 2. candidates + 3. verify in one join: both sides carry their
         #    signature, so bit_count(xor) rides the joined row
-        store_b = _read_component(
+        store_b = _store.read_component(
             spark, store_dir, "blocks", block_schema, min_live)
-        new_b = spark.read.schema(block_schema).parquet(
-            f"{blocks_dir}/batch_id={batch_id}")
+        new_b = _store.read_batch(
+            spark, store_dir, "blocks", batch_id, block_schema)
         s, n = store_b.alias("s"), F.broadcast(new_b.alias("n"))
         ham = F.bit_count(
             F.col("s.dhash64").bitwiseXOR(F.col("n.dhash64")))
@@ -121,30 +123,10 @@ def dhash_dedup_stream(
                 ham.cast("long").alias("hamming"))
             .where(F.col("hamming") <= max_hamming)
             .distinct())
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch_id={batch_id}")
-        # 4. bound state: horizon eviction + generational folding (shared
-        #    minhash_stream protocol)
-        if min_live is not None:
-            from .minhash_stream import _latest_gen
-            folded = {nm: _latest_gen(f"{store_dir}/compacted/{nm}")[1]
-                      for nm in ("blocks", "pairs")}
-            # THIS store's component names — _sweep_live's default is the
-            # minhash store's ('buckets','shingles','pairs'), under which
-            # the 'blocks' dirs would never be evicted
-            _sweep_live(store_dir, min_live, folded,
-                        components=("blocks", "pairs"))
-        if compact_every is not None and \
-                (batch_id + 1) % compact_every == 0:
-            pair_schema = StructType([
-                StructField("id_a", block_schema[id_col].dataType),
-                StructField("id_b", block_schema[id_col].dataType),
-                StructField("hamming", LongType()),
-            ])
-            _compact_component(spark, store_dir, "blocks", block_schema,
-                               min_live, batch_id, ("pfx",))
-            _compact_component(spark, store_dir, "pairs", pair_schema,
-                               min_live, batch_id)
+        _store.write_batch(pairs, store_dir, "pairs", batch_id)
+        # 4. bound state: horizon eviction + generational folding
+        _store.bound(spark, store_dir, batch_id, schemas, min_live,
+                     compact_every, {"blocks": ("pfx",)})
 
     return (
         img_stream.writeStream.foreachBatch(handle)
@@ -160,12 +142,7 @@ def dhash_pairs_store(spark: SparkSession, store_dir: str,
     generation ∪ live batch dirs (pairs can be rediscovered only across a
     replay, which overwrote in place, so DISTINCT is belt-and-braces for
     the cross-generation seam)."""
-    pair_schema = StructType([
-        StructField("id_a", LongType()),
-        StructField("id_b", LongType()),
-        StructField("hamming", LongType()),
-    ])
-    out = _read_component(spark, store_dir, "pairs", pair_schema, None)
+    out = _store.read_component(spark, store_dir, "pairs", _PAIR_SCHEMA)
     if out is None:
         return spark.createDataFrame(
             [], "id_a long, id_b long, hamming long")

@@ -36,9 +36,8 @@ one direction and can never be rediscovered (a later batch's NEW side
 contains neither member). Pinned in tests/test_media_stream.py for
 multiple batch splits and both arrival orders.
 
-State & files are bounded exactly as minhash_stream's store
-(``retention_batches`` horizon eviction + ``compact_every`` generational
-folding share the same crash-safe manifest protocol). The horizon
+State & files are bounded by ``retention_batches`` / ``compact_every``;
+the store layout and crash protocol are ``_store``'s. The horizon
 semantic is the shared one: a pair whose members arrive further apart
 than the retention window is missed by design — retention IS the
 approximation knob, not a correctness leak.
@@ -54,8 +53,7 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
 from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import (_FRAME_ID_BITS, audio_fingerprint,
                                     dhash_image, frame_sample)
-from .minhash_stream import (_compact_component, _latest_gen,
-                             _read_component, _sweep_live)
+from . import _store
 
 __all__ = ["audio_dedup_stream", "audio_pairs_store",
            "run_audio_stream_on_dir",
@@ -79,21 +77,6 @@ def _pair_schema(shared_name: str) -> StructType:
         StructField(shared_name, LongType()),
         StructField("overlap", DoubleType()),
     ])
-
-
-def _bound_state(spark, store_dir, components, min_live, compact_every,
-                 batch_id, schemas, partition_cols):
-    """Shared retention + compaction tail of both handlers (the
-    dhash_stream protocol, component names parameterized)."""
-    if min_live is not None:
-        folded = {nm: _latest_gen(f"{store_dir}/compacted/{nm}")[1]
-                  for nm in components}
-        _sweep_live(store_dir, min_live, folded, components=components)
-    if compact_every is not None and (batch_id + 1) % compact_every == 0:
-        for nm in components:
-            _compact_component(spark, store_dir, nm, schemas[nm],
-                               min_live, batch_id,
-                               partition_cols.get(nm, ()))
 
 
 def audio_dedup_stream(
@@ -124,8 +107,6 @@ def audio_dedup_stream(
     retroactive pair retraction. Stream ≡ batch holds at the batch
     default (max_df=None); cap pathological subfingerprints upstream
     (e.g. drop silence by rms) if a corpus needs it."""
-    fps_dir = f"{store_dir}/fps"
-    pairs_dir = f"{store_dir}/pairs"
     fp_schema = _fp_schema(id_col)
     pair_schema = _pair_schema("shared_fps")
     schemas = {"fps": fp_schema, "pairs": pair_schema}
@@ -133,8 +114,7 @@ def audio_dedup_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        min_live = (batch_id - retention_batches + 1
-                    if retention_batches is not None else None)
+        min_live = _store.oldest_live(batch_id, retention_batches)
         sets = (
             audio_fingerprint(
                 batch_df.select(F.col(id_col), F.col(content_col)),
@@ -149,14 +129,13 @@ def audio_dedup_stream(
         ).withColumn("pfx", F.pmod(F.col("fp"), F.lit(64)))
         # 1. extend the store first (replay-idempotent overwrite; lets
         #    same-batch pairs resolve through the store read)
-        (ex.write.mode("overwrite").partitionBy("pfx")
-         .parquet(f"{fps_dir}/batch_id={batch_id}"))
+        _store.write_batch(ex, store_dir, "fps", batch_id, ("pfx",))
         # 2. match the (small, broadcast) batch against history: one fp
         #    equi-join, shared count + overlap complete at discovery
-        store = _read_component(spark, store_dir, "fps", fp_schema,
-                                min_live)
-        new = spark.read.schema(fp_schema).parquet(
-            f"{fps_dir}/batch_id={batch_id}")
+        store = _store.read_component(spark, store_dir, "fps", fp_schema,
+                                      min_live)
+        new = _store.read_batch(spark, store_dir, "fps", batch_id,
+                                fp_schema)
         s, n = store.alias("s"), F.broadcast(new.alias("n"))
         pairs = (
             s.join(n, ["pfx", "fp"])
@@ -173,11 +152,9 @@ def audio_dedup_stream(
                     / F.first(F.least("s.n_fps", "n.n_fps")), 6)
                 .alias("overlap"))
             .where(F.col("shared_fps") >= min_shared))
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch_id={batch_id}")
-        _bound_state(spark, store_dir, ("fps", "pairs"), min_live,
-                     compact_every, batch_id, schemas,
-                     {"fps": ("pfx",)})
+        _store.write_batch(pairs, store_dir, "pairs", batch_id)
+        _store.bound(spark, store_dir, batch_id, schemas, min_live,
+                     compact_every, {"fps": ("pfx",)})
 
     return (
         clip_stream.writeStream.foreachBatch(handle)
@@ -189,8 +166,8 @@ def audio_dedup_stream(
 
 def audio_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Accumulated (id_a, id_b, shared_fps, overlap) pairs."""
-    out = _read_component(spark, store_dir, "pairs",
-                          _pair_schema("shared_fps"), None)
+    out = _store.read_component(spark, store_dir, "pairs",
+                                _pair_schema("shared_fps"))
     if out is None:
         return spark.createDataFrame(
             [], "id_a long, id_b long, shared_fps long, overlap double")
@@ -262,9 +239,6 @@ def video_dedup_stream(
     payload stream (``multimodal.video_matches`` semantics against
     history). Clip ids must be unique, non-negative and below 2³²
     (the packing contract — out-of-range ids raise at execution)."""
-    fb_dir = f"{store_dir}/fblocks"
-    cm_dir = f"{store_dir}/clipmeta"
-    pairs_dir = f"{store_dir}/pairs"
     fb_schema = _fblock_schema()
     cm_schema = _clipmeta_schema(id_col)
     pair_schema = _pair_schema("shared_frames")
@@ -275,8 +249,7 @@ def video_dedup_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        min_live = (batch_id - retention_batches + 1
-                    if retention_batches is not None else None)
+        min_live = _store.oldest_live(batch_id, retention_batches)
         frames = frame_sample(
             batch_df.select(F.col(id_col), F.col(content_col)),
             content_col, id_col, n_frames=n_frames)
@@ -296,19 +269,18 @@ def video_dedup_stream(
                             bits=64, max_hamming=max_hamming) \
             .withColumn("block_id", F.col("block_id").cast("long")) \
             .withColumn("pfx", F.pmod(F.col("block_val"), F.lit(64)))
-        (bk.write.mode("overwrite").partitionBy("pfx")
-         .parquet(f"{fb_dir}/batch_id={batch_id}"))
-        (sigs.select(
-            F.shiftrightunsigned("fid", _FRAME_ID_BITS).alias(id_col))
-         .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_frames"))
-         .write.mode("overwrite").parquet(
-             f"{cm_dir}/batch_id={batch_id}"))
+        _store.write_batch(bk, store_dir, "fblocks", batch_id, ("pfx",))
+        _store.write_batch(
+            sigs.select(
+                F.shiftrightunsigned("fid", _FRAME_ID_BITS).alias(id_col))
+            .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_frames")),
+            store_dir, "clipmeta", batch_id)
         # 2. frame pairs batch×history (pigeonhole blocks, bit_count
         #    verify), 3. clip-pair aggregation — video_matches verbatim
-        store_b = _read_component(spark, store_dir, "fblocks", fb_schema,
-                                  min_live)
-        new_b = spark.read.schema(fb_schema).parquet(
-            f"{fb_dir}/batch_id={batch_id}")
+        store_b = _store.read_component(spark, store_dir, "fblocks",
+                                        fb_schema, min_live)
+        new_b = _store.read_batch(spark, store_dir, "fblocks", batch_id,
+                                  fb_schema)
         s, n = store_b.alias("s"), F.broadcast(new_b.alias("n"))
         ham = F.bit_count(
             F.col("s.dhash64").bitwiseXOR(F.col("n.dhash64")))
@@ -334,8 +306,8 @@ def video_dedup_stream(
             F.count_distinct(F.struct("fa", "fb")).alias("shared_frames"),
             F.count_distinct("fa").alias("_da"),
             F.count_distinct("fb").alias("_db"))
-        meta = _read_component(spark, store_dir, "clipmeta", cm_schema,
-                               min_live)
+        meta = _store.read_component(spark, store_dir, "clipmeta",
+                                     cm_schema, min_live)
         na, nb = meta.alias("na"), meta.alias("nb")
         pairs = (
             agg.join(na, agg["ca"] == F.col(f"na.{id_col}"))
@@ -349,11 +321,9 @@ def video_dedup_stream(
                     .otherwise(F.col("_db") / F.col("nb.n_frames")), 6)
                 .alias("overlap"))
             .where(F.col("shared_frames") >= min_shared))
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch_id={batch_id}")
-        _bound_state(spark, store_dir, ("fblocks", "clipmeta", "pairs"),
-                     min_live, compact_every, batch_id, schemas,
-                     {"fblocks": ("pfx",)})
+        _store.write_batch(pairs, store_dir, "pairs", batch_id)
+        _store.bound(spark, store_dir, batch_id, schemas, min_live,
+                     compact_every, {"fblocks": ("pfx",)})
 
     return (
         clip_stream.writeStream.foreachBatch(handle)
@@ -365,8 +335,8 @@ def video_dedup_stream(
 
 def video_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Accumulated (id_a, id_b, shared_frames, overlap) clip pairs."""
-    out = _read_component(spark, store_dir, "pairs",
-                          _pair_schema("shared_frames"), None)
+    out = _store.read_component(spark, store_dir, "pairs",
+                                _pair_schema("shared_frames"))
     if out is None:
         return spark.createDataFrame(
             [], "id_a long, id_b long, shared_frames long, overlap double")

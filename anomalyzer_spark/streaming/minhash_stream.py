@@ -28,35 +28,18 @@ Verification and rounding are the shared batch code, so values match
 hash-for-hash — pinned in tests/test_streaming.py and value-hash checked
 against the batch DuckDB oracle by the ``minhash_stream`` contract query.
 
-Delivery: foreachBatch is AT-LEAST-ONCE; every write (buckets, shingles,
-pairs) overwrites its own ``batch_id=N`` directory, so a replayed batch
-rewrites identical files instead of appending duplicates — the
-effectively-once-by-idempotence contract serve_ivfpq_stream pins. Writing
-the store BEFORE candidate generation makes the replay read the same
-store contents the crashed attempt saw (the new rows self-pair harmlessly:
-``id_a < id_b`` drops self-matches, DISTINCT drops mirror matches).
+Delivery: every write (buckets, shingles, pairs) is ``_store``'s
+replay-idempotent batch-dir overwrite, and the store is written BEFORE
+candidate generation, so a replay reads the same store contents the
+crashed attempt saw (the new rows self-pair harmlessly: ``id_a < id_b``
+drops self-matches, DISTINCT drops mirror matches).
 
-State at 100 TB — growth is BOUNDED, not append-forever:
-
-* the store is the corpus' band buckets (bands rows/doc) and shingle sets
-  — O(in-horizon corpus). ``retention_batches=H`` evicts state older than
-  the dedup horizon after every batch (``batch_id < current - H + 1``
-  directories are dropped for buckets, shingles AND pairs — a pair whose
-  discovery batch left the horizon references evicted documents and is
-  stale by the same horizon contract).
-* ``compact_every=C`` folds the surviving per-batch directories into a
-  single ``compacted/<name>/gen=N`` generation every C batches, so the
-  file count stays O(C + 1 generation) instead of one directory (and its
-  task-count many files) per micro-batch forever. The generation carries
-  ``batch_id`` as a data column, so retention keeps working on compacted
-  rows; out-of-horizon rows are physically dropped at the next rewrite.
-  Compaction is crash-safe without atomic rename: the new generation is
-  written first, its ``_folded.json`` manifest records the highest live
-  ``batch_id`` it absorbed, readers take the newest COMPLETE generation
-  (``_SUCCESS`` + manifest) and only read live directories NEWER than its
-  fold point — a crash between generation write and live-dir deletion
-  double-stores but never double-reads. A replayed batch that already
-  compacted skips re-compaction (its generation exists and is complete).
+State is bounded by ``retention_batches`` / ``compact_every`` and the
+store layout, replay and crash protocol are ``_store``'s. The store is the
+corpus' band buckets (bands rows/doc) and shingle sets — O(in-horizon
+corpus); retention drops buckets, shingles AND pairs (a pair whose
+discovery batch left the horizon references evicted documents and is
+stale by the same horizon contract).
 
 The per-batch join broadcasts the NEW side, so the store is scanned, never
 shuffled; the store is partitioned by a bucket prefix (``pfx``, written
@@ -64,190 +47,34 @@ here) so broadcast-join dynamic partition pruning can skip store files
 whose prefixes the batch does not touch. Store reads pin an explicit
 schema (``pfx`` string): partition type inference would type an all-digit
 hex prefix batch as int and silently drift the join key type.
-
-Directory deletes use local-filesystem calls — on a real cluster this
-store lives on an object store / DFS and the sweep would issue the same
-deletes through that FS client; the layout and manifest protocol are
-FS-agnostic.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.dedup import (
     minhash_band_buckets, verify_jaccard_pairs, word_shingles,
 )
+from . import _store
+
+_COMPONENTS = ("buckets", "shingles", "pairs")
+
 
 def _pair_ddl(id_type: str) -> str:
     return f"id_a {id_type}, id_b {id_type}, jaccard double"
 
 
-def _store_paths(store_dir: str) -> tuple[str, str, str]:
-    return (f"{store_dir}/buckets", f"{store_dir}/shingles",
-            f"{store_dir}/pairs")
-
-
-def _with_batch_id(schema: StructType) -> StructType:
-    return StructType(list(schema.fields)
-                      + [StructField("batch_id", LongType())])
-
-
-def _live_batch_ids(live_dir: str) -> list[int]:
-    return sorted(
-        int(os.path.basename(p).split("=", 1)[1])
-        for p in glob.glob(f"{live_dir}/batch_id=*") if os.path.isdir(p))
-
-
-def _latest_gen(comp_dir: str) -> tuple[str | None, int]:
-    """Newest COMPLETE compacted generation (``_SUCCESS`` + manifest) and
-    the highest live batch_id folded into it; (None, -1) when none."""
-    if not os.path.isdir(comp_dir):
-        return None, -1
-    gens = sorted(
-        (int(os.path.basename(p).split("=", 1)[1]), p)
-        for p in glob.glob(f"{comp_dir}/gen=*") if os.path.isdir(p))
-    for _, path in reversed(gens):
-        manifest = f"{path}/_folded.json"
-        if os.path.isfile(f"{path}/_SUCCESS") and os.path.isfile(manifest):
-            with open(manifest) as f:
-                return path, int(json.load(f)["max_folded"])
-    return None, -1
-
-
-def _read_component(
-    spark: SparkSession,
-    store_dir: str,
-    name: str,
-    schema: StructType | None,
-    min_live: int | None,
-) -> DataFrame | None:
-    """Current state of one store component: newest complete compacted
-    generation ∪ live ``batch_id=N`` dirs newer than its fold point, rows
-    older than ``min_live`` filtered out. ``schema`` (data columns, pfx
-    included where applicable — batch_id appended here) is pinned on every
-    read so partition type inference can never drift a join key. Returns
-    None when the component holds nothing yet."""
-    live_dir = f"{store_dir}/{name}"
-    gen_path, folded = _latest_gen(f"{store_dir}/compacted/{name}")
-    full = _with_batch_id(schema) if schema is not None else None
-    parts: list[DataFrame] = []
-    if gen_path is not None:
-        r = spark.read
-        if full is not None:
-            r = r.schema(full)
-        parts.append(r.parquet(gen_path))
-    live_ids = [b for b in _live_batch_ids(live_dir) if b > folded]
-    if live_ids:
-        r = spark.read
-        if full is not None:
-            r = r.schema(full)
-        live = r.parquet(live_dir).where(F.col("batch_id") > folded)
-        if full is None:
-            live = live.withColumn(
-                "batch_id", F.col("batch_id").cast("long"))
-        parts.append(live)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if min_live is not None:
-        out = out.where(F.col("batch_id") >= min_live)
-    return out
-
-
-def _sweep_live(
-    store_dir: str,
-    min_live: int,
-    folded: dict[str, int],
-    components: tuple[str, ...] = ("buckets", "shingles", "pairs"),
-) -> None:
-    """Drop live ``batch_id`` dirs already folded into a complete
-    generation or older than the retention horizon. ``components``
-    defaults to this module's store; semantic_stream passes its own."""
-    for name in components:
-        live_dir = f"{store_dir}/{name}"
-        cut = max(min_live - 1, folded.get(name, -1))
-        for b in _live_batch_ids(live_dir):
-            if b <= cut:
-                shutil.rmtree(f"{live_dir}/batch_id={b}",
-                              ignore_errors=True)
-
-
-def _compact_component(
-    spark: SparkSession,
-    store_dir: str,
-    name: str,
-    schema: StructType,
-    min_live: int | None,
-    upto: int,
-    partition_cols: tuple[str, ...] = (),
-) -> None:
-    """Fold the current state of one component into ``compacted/<name>/
-    gen=<upto>``: write the new generation, stamp its manifest, then drop
-    the absorbed live dirs and every older generation. Skips if gen=<upto>
-    is already complete (batch replay after a crash-past-compaction)."""
-    comp_dir = f"{store_dir}/compacted/{name}"
-    gen_path = f"{comp_dir}/gen={upto}"
-    if (os.path.isfile(f"{gen_path}/_SUCCESS")
-            and os.path.isfile(f"{gen_path}/_folded.json")):
-        return
-    cur = _read_component(spark, store_dir, name, schema, min_live)
-    if cur is None:
-        return
-    # repartition, never coalesce(1): the generation holds the WHOLE
-    # in-horizon component, and funnelling it through one task would stall
-    # the stream (and hotspot one executor) exactly on the long-running
-    # corpora compaction exists for — defaultParallelism writers bound the
-    # file count to one generation's worth while staying parallel
-    w = (cur.repartition(*partition_cols) if partition_cols
-         else cur.repartition(spark.sparkContext.defaultParallelism))
-    wr = w.write.mode("overwrite")
-    if partition_cols:
-        wr = wr.partitionBy(*partition_cols)
-    wr.parquet(gen_path)
-    with open(f"{gen_path}/_folded.json", "w") as f:
-        json.dump({"max_folded": upto}, f)
-    # absorbed state: live dirs ≤ upto and superseded generations
-    for b in _live_batch_ids(f"{store_dir}/{name}"):
-        if b <= upto:
-            shutil.rmtree(f"{store_dir}/{name}/batch_id={b}",
-                          ignore_errors=True)
-    for p in glob.glob(f"{comp_dir}/gen=*"):
-        if os.path.isdir(p) and p != gen_path:
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _materialize_groups(
-    spark: SparkSession,
-    store_dir: str,
-    id_col: str,
-    upto: int,
-) -> None:
-    """Resolve the current pair state into groups and write them as a
-    ``compacted/groups/gen=<upto>`` generation (same complete-generation
-    protocol as the store components; skipped on batch replay)."""
-    comp_dir = f"{store_dir}/compacted/groups"
-    gen_path = f"{comp_dir}/gen={upto}"
-    if (os.path.isfile(f"{gen_path}/_SUCCESS")
-            and os.path.isfile(f"{gen_path}/_folded.json")):
-        return
-    groups = minhash_groups_store(spark, store_dir, id_col)
-    (groups.repartition(spark.sparkContext.defaultParallelism)
-     .write.mode("overwrite").parquet(gen_path))
-    with open(f"{gen_path}/_folded.json", "w") as f:
-        json.dump({"max_folded": upto}, f)
-    for p in glob.glob(f"{comp_dir}/gen=*"):
-        if os.path.isdir(p) and p != gen_path:
-            shutil.rmtree(p, ignore_errors=True)
+def _pair_schema(id_type) -> StructType:
+    return StructType([
+        StructField("id_a", id_type),
+        StructField("id_b", id_type),
+        StructField("jaccard", DoubleType()),
+    ])
 
 
 def _ingest_batch(
@@ -271,9 +98,7 @@ def _ingest_batch(
     construction: same writes, same store read, same verification)."""
     if batch_df.isEmpty():
         return
-    buckets_dir, shingles_dir, pairs_dir = _store_paths(store_dir)
-    min_live = (batch_id - retention_batches + 1
-                if retention_batches is not None else None)
+    min_live = _store.oldest_live(batch_id, retention_batches)
     new = batch_df.select(F.col(id_col), F.col(text_col))
     # 1. extend the store first (replay-idempotent batch_id overwrite;
     #    also lets same-batch pairs resolve through the store read)
@@ -288,20 +113,18 @@ def _ingest_batch(
     # files PER BATCH — measured 8k files for one 4.5k-doc batch, and
     # store scans/increments paid it back as pure file overhead); with
     # it the batch writes one file per touched pfx
-    (bk.repartition("pfx")
-     .write.mode("overwrite").partitionBy("pfx")
-     .parquet(f"{buckets_dir}/batch_id={batch_id}"))
+    _store.write_batch(bk.repartition("pfx"), store_dir, "buckets",
+                       batch_id, ("pfx",))
     sh_new = new.select(F.col(id_col),
                         word_shingles(F.col(text_col), k).alias("sh"))
     shingle_schema = sh_new.schema
-    (sh_new.write.mode("overwrite")
-     .parquet(f"{shingles_dir}/batch_id={batch_id}"))
+    _store.write_batch(sh_new, store_dir, "shingles", batch_id)
     # 2. candidates: (small) new buckets broadcast against the store —
     #    the store side is scanned, never shuffled
-    store_b = _read_component(
+    store_b = _store.read_component(
         spark, store_dir, "buckets", bucket_schema, min_live)
-    new_b = spark.read.schema(bucket_schema).parquet(
-        f"{buckets_dir}/batch_id={batch_id}")
+    new_b = _store.read_batch(
+        spark, store_dir, "buckets", batch_id, bucket_schema)
     cand = (
         store_b.alias("s")
         .join(F.broadcast(new_b.alias("n")), ["pfx", "bucket"])
@@ -319,37 +142,26 @@ def _ingest_batch(
         .distinct()
     )
     sh = (
-        _read_component(
+        _store.read_component(
             spark, store_dir, "shingles", shingle_schema, min_live)
         .join(F.broadcast(cand_ids), id_col, "left_semi")
         .select(id_col, "sh")
     )
-    (
-        verify_jaccard_pairs(sh, cand, threshold, id_col)
-        .write.mode("overwrite")
-        .parquet(f"{pairs_dir}/batch_id={batch_id}")
-    )
+    _store.write_batch(verify_jaccard_pairs(sh, cand, threshold, id_col),
+                       store_dir, "pairs", batch_id)
     # 4. bound state: evict out-of-horizon dirs; periodically fold the
     #    survivors into one compacted generation
-    if min_live is not None:
-        folded = {n: _latest_gen(f"{store_dir}/compacted/{n}")[1]
-                  for n in ("buckets", "shingles", "pairs")}
-        _sweep_live(store_dir, min_live, folded)
-    if compact_every is not None and \
-            (batch_id + 1) % compact_every == 0:
-        pair_schema = StructType([
-            StructField("id_a", bucket_schema[id_col].dataType),
-            StructField("id_b", bucket_schema[id_col].dataType),
-            StructField("jaccard", DoubleType()),
-        ])
-        _compact_component(spark, store_dir, "buckets", bucket_schema,
-                           min_live, batch_id, ("pfx",))
-        _compact_component(spark, store_dir, "shingles",
-                           shingle_schema, min_live, batch_id)
-        _compact_component(spark, store_dir, "pairs", pair_schema,
-                           min_live, batch_id)
-        if materialize_groups:
-            _materialize_groups(spark, store_dir, id_col, batch_id)
+    _store.bound(
+        spark, store_dir, batch_id,
+        {"buckets": bucket_schema, "shingles": shingle_schema,
+         "pairs": _pair_schema(bucket_schema[id_col].dataType)},
+        min_live, compact_every, {"buckets": ("pfx",)})
+    if materialize_groups and _store.compaction_due(batch_id, compact_every):
+        # the resolved groups become a generation of their own
+        _store.write_generation(
+            store_dir, "groups", batch_id,
+            lambda: minhash_groups_store(spark, store_dir, id_col)
+            .repartition(spark.sparkContext.defaultParallelism))
 
 
 def minhash_increment(
@@ -408,29 +220,17 @@ def minhash_increment(
             "materialize_groups=True requires compact_every (groups are "
             "materialized at compaction ticks)")
     if batch_id is None:
-        last = -1
-        for name in ("buckets", "shingles", "pairs"):
-            ids = _live_batch_ids(f"{store_dir}/{name}")
-            if ids:
-                last = max(last, ids[-1])
-            last = max(last, _latest_gen(f"{store_dir}/compacted/{name}")[1])
-        batch_id = last + 1
+        batch_id = _store.next_batch_id(store_dir, _COMPONENTS)
     _ingest_batch(
         spark, docs, batch_id, store_dir=store_dir, text_col=text_col,
         id_col=id_col, k=k, num_hashes=num_hashes, bands=bands,
         threshold=threshold, retention_batches=retention_batches,
         compact_every=compact_every, materialize_groups=materialize_groups)
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    pair_schema = StructType([
-        StructField("id_a", docs.schema[id_col].dataType),
-        StructField("id_b", docs.schema[id_col].dataType),
-        StructField("jaccard", DoubleType()),
-    ])
-    pairs_path = f"{_store_paths(store_dir)[2]}/batch_id={batch_id}"
-    if not os.path.isdir(pairs_path):  # empty increment wrote nothing
-        return spark.createDataFrame([], pair_schema)
-    return spark.read.schema(pair_schema).parquet(pairs_path)
+    pair_schema = _pair_schema(docs.schema[id_col].dataType)
+    if not os.path.isdir(_store.batch_path(store_dir, "pairs", batch_id)):
+        return spark.createDataFrame([], pair_schema)  # empty increment
+    return _store.read_batch(spark, store_dir, "pairs", batch_id,
+                             pair_schema)
 
 
 def minhash_dedup_stream(
@@ -522,12 +322,12 @@ def minhash_pairs_store(
     ``minhash_lsh_pairs`` over the surviving corpus. Returns an empty
     typed frame when nothing was ingested yet.
     """
-    pairs = _read_component(spark, store_dir, "pairs", None, None)
+    pairs = _store.read_component(spark, store_dir, "pairs")
     if pairs is None:
         return spark.createDataFrame([], _pair_ddl(id_type))
     pairs = pairs.select("id_a", "id_b", "jaccard")
     if only_ingested_ids:
-        ids = _read_component(spark, store_dir, "shingles", None, None)
+        ids = _store.read_component(spark, store_dir, "shingles")
         ids = (ids.select(F.col(id_col)).distinct()
                if ids is not None else
                spark.createDataFrame([], f"`{id_col}` {id_type}"))
@@ -570,11 +370,11 @@ def minhash_groups_store(
     from ..functions.dedup import duplicate_groups
 
     if prefer_materialized:
-        gen_path, _ = _latest_gen(f"{store_dir}/compacted/groups")
-        if gen_path is not None:
-            return spark.read.parquet(gen_path)
+        groups = _store.read_component(spark, store_dir, "groups")
+        if groups is not None:
+            return groups
 
-    ing = _read_component(spark, store_dir, "shingles", None, None)
+    ing = _store.read_component(spark, store_dir, "shingles")
     if ing is None:
         return spark.createDataFrame(
             [], f"`{id_col}` {id_type}, group_id long, group_size long")

@@ -120,8 +120,8 @@ def test_semantic_stream_retention_and_compaction(spark, fixture, tmp_path):
 
     from anomalyzer_spark.streaming import (run_semantic_stream_on_dir,
                                             semantic_pairs_store)
-    from anomalyzer_spark.streaming.minhash_stream import (_latest_gen,
-                                                           _live_batch_ids)
+    from anomalyzer_spark.streaming._store import (_latest_gen,
+                                                   _live_batch_ids)
 
     e, cents = fixture
     sdir = str(tmp_path / "in")

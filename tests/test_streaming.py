@@ -672,7 +672,7 @@ def test_minhash_stream_retention_and_compaction(spark, sf_dir, tmp_path):
     from anomalyzer_spark.sources import load_table
     from anomalyzer_spark.streaming import (
         minhash_pairs_store, run_minhash_stream_on_dir)
-    from anomalyzer_spark.streaming.minhash_stream import (
+    from anomalyzer_spark.streaming._store import (
         _latest_gen, _live_batch_ids)
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
