@@ -1482,8 +1482,8 @@ def q_decontam(spark, sf_dir):
     method, whose KS-derived probabilities are already hashed by the
     detect_default / detect_multi_mc / detect_stream_mc oracles over the
     same kernel and windows — the standalone column query added no
-    coverage beyond them (tests/test_columnar.py still pins ks_stat_col
-    against the NumPy oracle point-wise).
+    coverage beyond them (the engine no longer has a KS-stat column; the
+    statistic runs only inside the kernel's bootstrap_ks_test).
 
     Round-13 rider (the changelog -> snapshot_diff precedent): the same
     report is computed a SECOND time through the split-block Bloom
@@ -2448,10 +2448,10 @@ def _detect_sql(key: str, conf: AnomalyzerConf, bytest: bool = False,
         f"  (CASE WHEN p_{_ENT[e]} IS NOT NULL THEN {wref[e]} "
         f"END)::DOUBLE AS weight_{e}," for e in entries)
 
-    # NULL key components → 'None' sentinel, matching kernel.key_str_col
+    # NULL key components → 'None' sentinel, matching kernel.key_str_sql
     # and the streaming path's str(None). Documented collision: a literal
     # string key 'None' draws the same permutation stream as a NULL key
-    # (see key_str_col docstring).
+    # (see key_str_sql docstring).
     kpre = (f", '{conf.seed}|' || concat_ws('|', "
             + ", ".join(f"coalesce({c}::VARCHAR, 'None')" for c in key_cols)
             + ") || '|' AS kpre" if mc else "")

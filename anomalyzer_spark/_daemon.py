@@ -16,9 +16,10 @@ and is pure fixed overhead per task at any scale.
 This daemon module (``spark.python.daemon.module``) installs the same
 guard newer CPython applies to directory finders: skip the re-read when
 the archive's (mtime_ns, size) is unchanged, delegate to the original
-otherwise. Semantics are preserved — a genuinely modified/replaced
-archive (e.g. an ``addPyFile`` zip overwritten mid-session) still
-invalidates; an untouched pyspark.zip stops being re-parsed per task.
+otherwise. The (mtime_ns, size) key is kept on each importer, so every
+importer of a genuinely modified/replaced archive (e.g. an ``addPyFile``
+zip overwritten mid-session) still invalidates; an untouched pyspark.zip
+stops being re-parsed per task.
 Skipped instances keep serving their previously cached directory, which
 is byte-identical while the archive is unchanged.
 
@@ -37,7 +38,6 @@ import zipimport
 
 from pyspark import daemon as _daemon
 
-_seen: dict[str, tuple[int, int]] = {}
 _orig_invalidate = zipimport.zipimporter.invalidate_caches
 
 
@@ -47,10 +47,14 @@ def _invalidate_caches(self):  # noqa: ANN001 - zipimporter instance
         key = (st.st_mtime_ns, st.st_size)
     except OSError:
         return _orig_invalidate(self)
-    if _seen.get(self.archive) == key:
+    # the key lives on the importer, not per archive path: every importer
+    # of a rewritten archive (one per package path inside it) must
+    # re-read its own cached directory
+    if getattr(self, "_anomalyzer_archive_key", None) == key:
         return None  # unchanged archive: cached directory stays valid
-    _seen[self.archive] = key
-    return _orig_invalidate(self)
+    out = _orig_invalidate(self)
+    self._anomalyzer_archive_key = key
+    return out
 
 
 zipimport.zipimporter.invalidate_caches = _invalidate_caches

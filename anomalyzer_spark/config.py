@@ -42,10 +42,13 @@ class AnomalyzerConf:
     #: permutation stream spec for the Monte-Carlo tests (ours; the
     #: reference uses an unseeded global RNG). "hash" = md5-argsort per
     #: position (SURVEY §2.6.9): engine-portable, value-hash oracle-able
-    #: in DuckDB SQL, ~7 ms/key — the correctness-contract default.
+    #: in DuckDB SQL, ~0.7 ms/key of permutations at perm_count=500,
+    #: window 5 and 4 MC tests — the correctness-contract default.
     #: "fast" = one md5 per (key, test) seeding a vectorized counter RNG
     #: (NumPy Philox): same determinism and statistical validity, ~8×
-    #: the throughput at 100k keys (tools/scale_sweep.py, BASELINE.md), but
+    #: the throughput at 100k keys before the md5 word-template kernel
+    #: (tools/scale_sweep.py, BASELINE.md; 0.10 vs 0.72 ms/key of
+    #: permutations at the shape above), but
     #: NOT reproducible in SQL — use for production scale, not oracles.
     perm_spec: str = "hash"
     reference_size: int = field(init=False)

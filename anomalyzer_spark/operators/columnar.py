@@ -1,11 +1,18 @@
-"""Pure-column implementations of the deterministic tests.
+"""Pure-SQL implementations of the deterministic tests.
 
-fence / magnitude / cdf / ks_stat (reference: /root/reference/algorithms.go
-73-93, 231-252, 209-227, 255-288) re-expressed as Spark Column expressions
-over an ``array<double>`` tail-window column. Everything here is JVM-side
+fence / magnitude / cdf (reference Go anomalyzer: algorithms.go 73-93,
+231-252, 209-227) re-expressed as Spark SQL expressions over an
+``array<double>`` tail-window column. Everything here is JVM-side
 (higher-order array functions + arithmetic) — no Python in the hot path, so
 Catalyst/codegen can optimize and the cost per key is independent of total
-data volume.
+data volume. (The KS statistic exists only inside the Monte-Carlo
+``bootstrap_ks_test``, so it runs in the kernel, not here.)
+
+The expressions are built as SQL TEXT and applied with one ``selectExpr``
+per stage: a PySpark Column tree costs one py4j round trip per node (~3,000
+per MC ``detect()`` call), a text projection one per projected column.
+Text rules: every float literal goes through ``sql_double`` (a bare ``0.5``
+parses as DECIMAL), every caller-supplied name through ``sql_ident``.
 
 The window column is the per-key tail of the series in ascending
 (ts, tiebreak) order, bounded to ``conf.window_size`` points (SURVEY.md
@@ -14,66 +21,33 @@ The window column is the per-key tail of the series in ascending
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import math
+
+from pyspark.sql import DataFrame
 
 from ..config import AnomalyzerConf
 
 
-def _mean(arr: Column) -> Column:
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier: the column literally named ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x: float) -> str:
+    """A DOUBLE literal that parses to exactly ``float(x)``."""
+    x = float(x)
+    if not math.isfinite(x):
+        return f"CAST('{x}' AS DOUBLE)"
+    return f"({x!r}D)" if x < 0 else f"{x!r}D"
+
+
+_EMPTY = "CAST(array() AS ARRAY<DOUBLE>)"
+
+
+def _mean(arr: str) -> str:
     """Arithmetic mean of an array<double>; NULL on empty."""
-    return F.when(
-        F.size(arr) > 0,
-        F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x) / F.size(arr),
-    )
-
-
-def _cap01(x: Column) -> Column:
-    return F.greatest(F.least(x, F.lit(1.0)), F.lit(0.0))
-
-
-class WindowSlices:
-    """Shared active/reference slices over the tail vector.
-
-    Mirrors ``extractWindows`` (algorithms.go:56-69): shrink-to-fit sizes,
-    and a per-test minimum reference size expressed as a NULL guard. Building
-    these once and reusing them across tests keeps the shared sub-expressions
-    (sizes, slices, means) to a single computation in the generated plan.
-    """
-
-    def __init__(self, vec: Column, conf: AnomalyzerConf):
-        self.vec = vec
-        self.conf = conf
-        self.n = F.size(vec)
-        # activeSize = min(activeSize, n); refSize = min(refSize, n - activeSize)
-        self.act_n = F.least(F.lit(conf.active_size), self.n)
-        self.ref_n = F.least(F.lit(conf.reference_size), self.n - self.act_n)
-        self.active = F.slice(vec, self.n - self.act_n + 1, conf.active_size)
-        self.reference = F.when(
-            self.ref_n > 0,
-            F.slice(vec, self.n - self.act_n - self.ref_n + 1, self.ref_n),
-        ).otherwise(F.array().cast("array<double>"))
-        self.active_mean = _mean(self.active)
-        self.ref_mean = _mean(self.reference)
-
-        # |first differences| for the cdf test (govector Diff().Apply(abs))
-        self.adiffs = F.when(
-            self.n > 1,
-            F.zip_with(
-                F.slice(vec, 2, self.n - 1),
-                F.slice(vec, 1, self.n - 1),
-                lambda a, b: F.abs(a - b),
-            ),
-        ).otherwise(F.array().cast("array<double>"))
-        nd = F.size(self.adiffs)
-        self.dact_n = F.least(F.lit(conf.active_size), nd)
-        # diff-based tests use referenceSize - 1 (algorithms.go:111, 211)
-        self.dref_n = F.least(F.lit(conf.reference_size - 1), nd - self.dact_n)
-        self.dactive = F.slice(self.adiffs, nd - self.dact_n + 1, conf.active_size)
-        self.dreference = F.when(
-            self.dref_n > 0,
-            F.slice(self.adiffs, nd - self.dact_n - self.dref_n + 1, self.dref_n),
-        ).otherwise(F.array().cast("array<double>"))
+    return (f"CASE WHEN size({arr}) > 0 THEN "
+            f"aggregate({arr}, 0.0D, (acc, x) -> acc + x) / size({arr}) END")
 
 
 # --------------------------------------------------------------------------
@@ -83,8 +57,8 @@ class WindowSlices:
 # variables) are EXCLUDED from Catalyst's subexpression elimination, so a
 # single deep tree that references `adiffs` or a window mean k times
 # re-evaluates the whole subtree k times — measured 10-15x slower than
-# evaluating each shared intermediate once. The staged builders below split
-# the computation across successive projections with NAMED columns;
+# evaluating each shared intermediate once. The stages below split the
+# computation across successive projections with NAMED columns;
 # CollapseProject keeps projections separate when a non-cheap producer is
 # referenced more than once, so every intermediate is computed exactly once.
 # --------------------------------------------------------------------------
@@ -93,27 +67,44 @@ class WindowSlices:
 _P = "_cx_"
 
 
-def stage1_cols(vec: Column, conf: AnomalyzerConf) -> dict[str, Column]:
-    """Shared window stats straight off the tail vector."""
-    s = WindowSlices(vec, conf)
+def _stage1(conf: AnomalyzerConf) -> dict[str, str]:
+    """Shared window stats straight off the tail vector ``vec``.
+
+    Mirrors ``extractWindows`` (algorithms.go:56-69): shrink-to-fit sizes,
+    activeSize = min(activeSize, n), refSize = min(refSize, n - activeSize).
+    """
+    a, r = conf.active_size, conf.reference_size
+    n = "size(vec)"
+    act_n = f"least({a}, {n})"
+    ref_n = f"least({r}, {n} - {act_n})"
+    active = f"slice(vec, {n} - {act_n} + 1, {a})"
+    reference = (f"CASE WHEN {ref_n} > 0 THEN "
+                 f"slice(vec, {n} - {act_n} - {ref_n} + 1, {ref_n}) "
+                 f"ELSE {_EMPTY} END")
+    # |first differences| for the cdf test (govector Diff().Apply(abs))
+    adiffs = (f"CASE WHEN {n} > 1 THEN zip_with(slice(vec, 2, {n} - 1), "
+              f"slice(vec, 1, {n} - 1), (a, b) -> abs(a - b)) "
+              f"ELSE {_EMPTY} END")
     return {
-        f"{_P}act_mean": s.active_mean,
-        f"{_P}ref_mean": s.ref_mean,
-        f"{_P}ref_n": s.ref_n,
-        f"{_P}adiffs": s.adiffs,
+        f"{_P}act_mean": _mean(active),
+        f"{_P}ref_mean": _mean(reference),
+        f"{_P}ref_n": ref_n,
+        f"{_P}adiffs": adiffs,
     }
 
 
-def stage2_cols(conf: AnomalyzerConf) -> dict[str, Column]:
-    """Diff-window stats reading the named stage-1 columns."""
-    ad = F.col(f"{_P}adiffs")
-    nd = F.size(ad)
-    dact_n = F.least(F.lit(conf.active_size), nd)
-    dref_n = F.least(F.lit(conf.reference_size - 1), nd - dact_n)
-    dactive = F.slice(ad, nd - dact_n + 1, conf.active_size)
-    dref = F.when(
-        dref_n > 0, F.slice(ad, nd - dact_n - dref_n + 1, dref_n)
-    ).otherwise(F.array().cast("array<double>"))
+def _stage2(conf: AnomalyzerConf) -> dict[str, str]:
+    """Diff-window stats reading the named stage-1 ``adiffs``; diff-based
+    tests use referenceSize - 1 (algorithms.go:111, 211)."""
+    a, r = conf.active_size, conf.reference_size
+    ad = f"{_P}adiffs"
+    nd = f"size({ad})"
+    dact_n = f"least({a}, {nd})"
+    dref_n = f"least({r - 1}, {nd} - {dact_n})"
+    dactive = f"slice({ad}, {nd} - {dact_n} + 1, {a})"
+    dref = (f"CASE WHEN {dref_n} > 0 THEN "
+            f"slice({ad}, {nd} - {dact_n} - {dref_n} + 1, {dref_n}) "
+            f"ELSE {_EMPTY} END")
     return {
         f"{_P}dref_n": dref_n,
         f"{_P}dact_mean": _mean(dactive),
@@ -122,86 +113,57 @@ def stage2_cols(conf: AnomalyzerConf) -> dict[str, Column]:
     }
 
 
-def staged_fence_prob(conf: AnomalyzerConf) -> Column:
-    x = F.col(f"{_P}act_mean")
-    if conf.lower_bound is None:
-        distance = x / F.lit(float(conf.upper_bound))
-    else:
-        half = (conf.upper_bound - conf.lower_bound) / 2.0
-        mid = conf.lower_bound + half
-        distance = F.abs(x - F.lit(mid)) / F.lit(half)
-    return (F.pow(F.lit(10.0), _cap01(distance)) - 1.0) / 9.0
+def aliased(exprs: dict[str, str]) -> list[str]:
+    """``{name: text}`` → ``["text AS name", ...]`` for ``selectExpr``."""
+    return [f"{e} AS {n}" for n, e in exprs.items()]
 
 
-def staged_magnitude_prob(conf: AnomalyzerConf) -> Column:
-    am, rm, rn = (F.col(f"{_P}act_mean"), F.col(f"{_P}ref_mean"),
-                  F.col(f"{_P}ref_n"))
-    return F.when(rn < 1, F.lit(None).cast("double")).otherwise(
-        F.when(rm == 0.0, F.when(am == 0.0, 0.0).otherwise(1.0)).otherwise(
-            F.abs(am - rm) / rm))
+def stage_stats(df: DataFrame, carry: list[str],
+                conf: AnomalyzerConf) -> DataFrame:
+    """``df`` (``carry`` columns + ``vec``) with the named window stats the
+    prob formulas read: stage 1, then — for cdf — stage 2 in its own
+    projection. ``carry`` entries are SQL text (quote names with
+    ``sql_ident``)."""
+    s1 = _stage1(conf)
+    out = df.selectExpr(*carry, "vec", *aliased(s1))
+    if "cdf" in conf.methods:
+        out = out.selectExpr(*carry, "vec", *s1, *aliased(_stage2(conf)))
+    return out
 
 
-def staged_cdf_prob(conf: AnomalyzerConf) -> Column:
-    q = F.col(f"{_P}dact_mean") - F.col(f"{_P}dref_mean")
-    drn = F.col(f"{_P}dref_n")
-    pct = F.size(F.filter(F.col(f"{_P}dref"), lambda x: x <= q)) / drn
-    return F.when(drn < conf.active_size, F.lit(None).cast("double")).otherwise(
-        2.0 * F.abs(F.lit(0.5) - pct))
-
-
-def fence_prob(s: WindowSlices) -> Column:
-    """FenceTest (algorithms.go:73-93): distance of active mean from bounds,
-    sharpened by weightExp(·, 10) = (10^x - 1)/9."""
-    conf = s.conf
-    x = s.active_mean
-    if conf.lower_bound is None:
-        distance = x / F.lit(float(conf.upper_bound))
-    else:
-        half = (conf.upper_bound - conf.lower_bound) / 2.0
-        mid = conf.lower_bound + half
-        distance = F.abs(x - F.lit(mid)) / F.lit(half)
-    return (F.pow(F.lit(10.0), _cap01(distance)) - 1.0) / 9.0
-
-
-def magnitude_prob(s: WindowSlices) -> Column:
-    """MagnitudeTest (algorithms.go:231-252). NULL when the reference window
-    is empty (minRefSize=1); raw (un-capped) value, Eval caps it."""
-    pdiff = F.abs(s.active_mean - s.ref_mean) / s.ref_mean
-    return F.when(s.ref_n < 1, F.lit(None).cast("double")).otherwise(
-        F.when(s.ref_mean == 0.0, F.when(s.active_mean == 0.0, 0.0).otherwise(1.0)).otherwise(
-            pdiff
-        )
-    )
-
-
-def cdf_prob(s: WindowSlices) -> Column:
-    """CDFTest (algorithms.go:209-227): reference-window ECDF of |diffs|
-    evaluated at (mean(active diffs) - mean(ref diffs)), tails rescaled to 1.
-    ECDF is right-continuous: F(q) = #{x <= q} / n."""
-    q = _mean(s.dactive) - _mean(s.dreference)
-    percentile = F.size(F.filter(s.dreference, lambda x: x <= q)) / F.size(s.dreference)
-    out = 2.0 * F.abs(F.lit(0.5) - percentile)
-    return F.when(s.dref_n < s.conf.active_size, F.lit(None).cast("double")).otherwise(out)
-
-
-def ks_stat_col(s: WindowSlices) -> Column:
-    """KsStat (algorithms.go:255-288): ECDFs of both windows evaluated on an
-    evenly spaced (n1+n2)-point grid between the pooled min and max; the
-    statistic is the max absolute gap. Grid uses mn + i*step (oracle.py
-    docstring pins this formula). NULL when n1 % n2 != 0 or windows short."""
-    n1, n2 = s.ref_n, s.act_n
-    g = n1 + n2
-    mn = F.least(F.array_min(s.reference), F.array_min(s.active))
-    mx = F.greatest(F.array_max(s.reference), F.array_max(s.active))
-    step = (mx - mn) / (g - 1).cast("double")
-    ref, act = s.reference, s.active
-    gaps = F.transform(
-        F.sequence(F.lit(0), g - 1),
-        lambda i: F.abs(
-            F.size(F.filter(act, lambda x: x <= mn + step * i)) / n2.cast("double")
-            - F.size(F.filter(ref, lambda x: x <= mn + step * i)) / n1.cast("double")
-        ),
-    )
-    return F.when(
-        (s.ref_n < s.conf.active_size) | (n1 % n2 != 0), F.lit(None).cast("double")
-    ).otherwise(F.array_max(gaps))
+def prob_sql(conf: AnomalyzerConf) -> dict[str, str]:
+    """``{"_p_<test>": formula}`` for the conf's deterministic tests, over
+    the named stats of ``stage_stats`` (or ``detect_rolling``'s frame
+    aggregates of the same names)."""
+    out = {}
+    if "fence" in conf.methods:
+        # FenceTest (algorithms.go:73-93): distance of the active mean from
+        # the bounds, sharpened by weightExp(·, 10) = (10^x - 1)/9
+        x = f"{_P}act_mean"
+        if conf.lower_bound is None:
+            distance = f"{x} / {sql_double(conf.upper_bound)}"
+        else:
+            half = (conf.upper_bound - conf.lower_bound) / 2.0
+            mid = conf.lower_bound + half
+            distance = f"abs({x} - {sql_double(mid)}) / {sql_double(half)}"
+        out["_p_fence"] = (f"(power(10.0D, greatest(least({distance}, 1.0D),"
+                           f" 0.0D)) - 1.0D) / 9.0D")
+    if "magnitude" in conf.methods:
+        # MagnitudeTest (algorithms.go:231-252): NULL when the reference
+        # window is empty (minRefSize=1); raw (un-capped), Eval caps it
+        am, rm = f"{_P}act_mean", f"{_P}ref_mean"
+        out["_p_magnitude"] = (
+            f"CASE WHEN {_P}ref_n < 1 THEN CAST(NULL AS DOUBLE) "
+            f"ELSE CASE WHEN {rm} = 0.0D THEN "
+            f"CASE WHEN {am} = 0.0D THEN 0.0D ELSE 1.0D END "
+            f"ELSE abs({am} - {rm}) / {rm} END END")
+    if "cdf" in conf.methods:
+        # CDFTest (algorithms.go:209-227): reference-window ECDF of |diffs|
+        # at mean(active diffs) - mean(ref diffs), tails rescaled to 1;
+        # the ECDF is right-continuous: F(q) = #{x <= q} / n
+        q = f"{_P}dact_mean - {_P}dref_mean"
+        pct = f"size(filter({_P}dref, x -> x <= {q})) / {_P}dref_n"
+        out["_p_cdf"] = (f"CASE WHEN {_P}dref_n < {conf.active_size} "
+                         f"THEN CAST(NULL AS DOUBLE) "
+                         f"ELSE abs(0.5D - {pct}) * 2.0D END")
+    return out

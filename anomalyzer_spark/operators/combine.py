@@ -1,7 +1,8 @@
-"""Eval combiner as pure column expressions.
+"""Eval combiner as SQL expression text.
 
 Reproduces ``Eval``/``EvalByTest``/``getWeight``
-(/root/reference/anomalyze.go:145-241):
+(reference Go anomalyzer: anomalyze.go:145-241) over per-test prob columns
+named ``_p_<test>``:
 
   * cap every per-test prob to [0, 1];
   * NULL (the reference's NA) results are dropped from the weighted mean;
@@ -11,70 +12,62 @@ Reproduces ``Eval``/``EvalByTest``/``getWeight``
   * dynamic weights: 0.5 base, 5.0 for magnitude/fence when their prob > 0.8;
   * weighted mean with 0 fallback when no test produced a value;
   * delay gate: 0 until the key has ``window_size`` points (when enabled).
+
+``detect``, ``detect_by_test`` and ``detect_rolling`` all project these
+texts with ``selectExpr`` (see columnar.py for why text, not Columns).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ..config import AnomalyzerConf
-
-#: Combiner entry names in output order (highrank/lowrank fold into "rank").
-def combined_entries(methods: tuple[str, ...]) -> list[str]:
-    out: list[str] = []
-    for m in methods:
-        name = "rank" if m in ("highrank", "lowrank") else m
-        if name not in out:
-            out.append(name)
-    return out
+from .columnar import sql_double
 
 
-def _cap01(x: Column) -> Column:
+def _cap01(p: str) -> str:
     # NULL must stay NULL (the reference's cap() passes NA through,
     # anomalyze.go:154) — Spark's least/greatest SKIP nulls, so guard.
-    return F.when(x.isNotNull(), F.greatest(F.least(x, F.lit(1.0)), F.lit(0.0)))
+    return (f"CASE WHEN {p} IS NOT NULL THEN "
+            f"greatest(least({p}, 1.0D), 0.0D) END")
 
 
-def merge_probs(probs: dict[str, Column], methods: tuple[str, ...]) -> dict[str, Column]:
-    """Cap raw per-test probs and fold highrank/lowrank into 'rank' (max)."""
-    capped = {m: _cap01(probs[m]) for m in methods}
-    merged: dict[str, Column] = {}
+def merged_sql(methods: tuple[str, ...]) -> dict[str, str]:
+    """Capped per-test probs, highrank/lowrank folded into 'rank' (max),
+    as {entry: SQL text} in output order."""
+    capped = {m: _cap01(f"_p_{m}") for m in methods}
+    merged: dict[str, str] = {}
     for m in methods:
         if m in ("highrank", "lowrank"):
             if "rank" not in merged:
                 pair = [capped[x] for x in ("highrank", "lowrank") if x in methods]
                 # greatest() skips NULLs, matching "NA results dropped / max".
-                merged["rank"] = pair[0] if len(pair) == 1 else F.greatest(*pair)
+                merged["rank"] = (pair[0] if len(pair) == 1
+                                  else f"greatest({pair[0]}, {pair[1]})")
         else:
             merged[m] = capped[m]
     return merged
 
 
-def weight_col(name: str, prob: Column) -> Column:
+def weight_sql(name: str, p: str) -> str:
     """getWeight (anomalyze.go:225-241)."""
     if name in ("magnitude", "fence"):
-        return F.when(prob > 0.8, F.lit(5.0)).otherwise(F.lit(0.5))
-    return F.lit(0.5)
+        return f"CASE WHEN {p} > 0.8D THEN 5.0D ELSE 0.5D END"
+    return "0.5D"
 
 
-def combined_prob(
-    merged: dict[str, Column], conf: AnomalyzerConf, n_points: Column
-) -> Column:
+def combined_sql(merged: dict[str, str], conf: AnomalyzerConf) -> str:
     """Weighted mean of the merged per-test probs with all Eval gates."""
-    num = F.lit(0.0)
-    den = F.lit(0.0)
+    num = den = "0.0D"
     for name, p in merged.items():
-        w = weight_col(name, p)
-        num = num + F.coalesce(p * w, F.lit(0.0))
-        den = den + F.when(p.isNotNull(), w).otherwise(F.lit(0.0))
-    prob = F.when(den > 0.0, num / den).otherwise(F.lit(0.0))
+        w = weight_sql(name, p)
+        num = f"{num} + coalesce({p} * {w}, 0.0D)"
+        den = f"{den} + CASE WHEN {p} IS NOT NULL THEN {w} ELSE 0.0D END"
+    prob = f"CASE WHEN ({den}) > 0.0D THEN ({num}) / ({den}) ELSE 0.0D END"
 
     if "magnitude" in merged:
         m = merged["magnitude"]
-        prob = F.when(m.isNotNull() & (m < F.lit(conf.sensitivity)), F.lit(0.0)).otherwise(
-            prob
-        )
+        prob = (f"CASE WHEN {m} IS NOT NULL AND {m} < "
+                f"{sql_double(conf.sensitivity)} THEN 0.0D ELSE {prob} END")
     if conf.delay:
-        prob = F.when(n_points < F.lit(conf.window_size), F.lit(0.0)).otherwise(prob)
+        prob = (f"CASE WHEN n_points < {conf.window_size} THEN 0.0D "
+                f"ELSE {prob} END")
     return prob

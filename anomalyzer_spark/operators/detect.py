@@ -13,8 +13,8 @@ Plan shape (SURVEY.md §3.4):
       → single hash exchange on keys
       → row_number tail-N (bounded state, §2.6.2)
       → groupBy keys → ordered tail array
-      → per-test columns: pure-column tests inline (JVM),
-        Monte-Carlo tests via one Arrow pandas-UDF struct
+      → per-test columns: deterministic tests as staged SQL projections
+        (JVM), Monte-Carlo tests via one Arrow pandas-UDF struct
       → combiner expression
 
 100 TB note: ``row_number`` alone would shuffle the FULL history. Pass
@@ -30,12 +30,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..config import AnomalyzerConf
 from . import columnar
-from .combine import combined_prob, merge_probs
-from .kernel import MC_METHODS, key_str_col, mc_probs_udf
+from .columnar import sql_ident
+from .combine import combined_sql, merged_sql, weight_sql
+from .kernel import MC_METHODS, key_str_sql, mc_probs_udf
 
 DETERMINISTIC = {"fence", "magnitude", "cdf"}
 
@@ -92,7 +92,8 @@ def tail_window(
     """
     tiebreak_cols = tiebreak_cols or []
     cols = [*keys, ts_col, *tiebreak_cols, value_col]
-    out = df.select(*dict.fromkeys(cols))  # dedup, keep order
+    # dedup, keep order
+    out = df.selectExpr(*map(sql_ident, dict.fromkeys(cols)))
 
     if horizon is not None and horizon_anchor is not None:
         out = out.where(F.col(ts_col) >= F.lit(horizon_anchor) - horizon)
@@ -102,43 +103,44 @@ def tail_window(
             F.col(ts_col) >= F.col("_max_ts") - horizon
         ).drop("_max_ts")
 
-    order = [F.col(ts_col).desc()] + [F.col(c).desc() for c in tiebreak_cols]
+    qk = [sql_ident(k) for k in keys]
+    qts, qv = sql_ident(ts_col), sql_ident(value_col)
+    qtb = [sql_ident(c) for c in tiebreak_cols]
+    order = ", ".join(f"{c} DESC" for c in (qts, *qtb))
     if skew_salts is not None and skew_salts > 1:
-        salt = F.pmod(
-            F.hash(F.col(ts_col), *[F.col(c) for c in tiebreak_cols],
-                   F.col(value_col)),
-            F.lit(skew_salts))
-        w1 = Window.partitionBy(*keys, "_salt").orderBy(*order)
-        out = (out.withColumn("_salt", salt)
-               .withColumn("_rn1", F.row_number().over(w1))
-               .where(F.col("_rn1") <= n).drop("_rn1", "_salt"))
-    w = Window.partitionBy(*keys).orderBy(*order)
-    tail = out.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n)
+        salt = f"pmod(hash({', '.join((qts, *qtb, qv))}), {skew_salts})"
+        out = (out.selectExpr("*", f"{salt} AS _salt")
+               .selectExpr("*", f"row_number() OVER (PARTITION BY "
+                                f"{', '.join(qk)}, _salt ORDER BY {order}) "
+                                f"AS _rn1")
+               .where(f"_rn1 <= {n}").drop("_rn1", "_salt"))
+    tail = out.selectExpr("*", f"row_number() OVER (PARTITION BY "
+                               f"{', '.join(qk)} ORDER BY {order}) AS _rn"
+                          ).where(f"_rn <= {n}")
 
-    point = F.struct(
-        F.col(ts_col).alias("_ts"),
-        *[F.col(c).alias(f"_tb{i}") for i, c in enumerate(tiebreak_cols)],
-        F.col(value_col).cast("double").alias("_v"),
-    )
-    return tail.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(point)).alias("_pts"),
-        F.count(F.lit(1)).alias("n_points"),
-        F.max(ts_col).alias("last_ts"),
-    ).withColumn("vec", F.col("_pts._v")).drop("_pts")
+    point = ", ".join([f"{qts} AS _ts",
+                       *[f"{c} AS _tb{i}" for i, c in enumerate(qtb)],
+                       f"CAST({qv} AS DOUBLE) AS _v"])
+    return tail.groupBy(*[tail[k] for k in qk]).agg(
+        F.expr(f"sort_array(collect_list(struct({point}))) AS _pts"),
+        F.expr("count(1) AS n_points"),
+        F.expr(f"max({qts}) AS last_ts"),
+    ).selectExpr(*qk, "n_points", "last_ts", "_pts._v AS vec")
 
 
-def _staged_probs(
-    tails: DataFrame, keys: list[str], conf: AnomalyzerConf, key_str: Column
-) -> tuple[DataFrame, dict[str, Column]]:
-    """Stage the shared window stats as named columns across projections,
-    then return (staged frame, per-test prob columns reading them).
+def _with_probs(tails: DataFrame, keys: list[str],
+                conf: AnomalyzerConf) -> DataFrame:
+    """(keys..., n_points, last_ts, _p_<test>...) per key: the staged window
+    stats (columnar.stage_stats), the deterministic prob formulas, and the
+    Monte-Carlo kernel's struct fields.
 
     Staging matters: interpreted higher-order expressions are excluded from
     subexpression elimination, so one flat tree re-evaluates every shared
     slice/mean per reference — measured 10-15x slower (columnar.py notes).
+    The raw per-test probs are staged too: the combiner references each
+    several times (cap, weight, numerator, denominator, gate).
     """
-    deterministic = [m for m in conf.methods if m in DETERMINISTIC]
-    carry = [*keys, "n_points", "last_ts"]
+    carry = [*map(sql_ident, keys), "n_points", "last_ts"]
     mc = tuple(m for m in conf.methods if m in MC_METHODS)
     staged = tails
     if mc:
@@ -151,29 +153,21 @@ def _staged_probs(
         # small the aggregated frame is.
         staged = staged.repartition(
             tails.sparkSession.sparkContext.defaultParallelism)
-    if deterministic:
-        s1 = columnar.stage1_cols(F.col("vec"), conf)
-        staged = staged.select(
-            *carry, "vec", *[c.alias(n) for n, c in s1.items()])
-        if "cdf" in conf.methods:
-            s2 = columnar.stage2_cols(conf)
-            staged = staged.select(
-                *carry, "vec", *[F.col(n) for n in s1],
-                *[c.alias(n) for n, c in s2.items()])
-
-    probs: dict[str, Column] = {}
-    if "fence" in conf.methods:
-        probs["fence"] = columnar.staged_fence_prob(conf)
-    if "magnitude" in conf.methods:
-        probs["magnitude"] = columnar.staged_magnitude_prob(conf)
-    if "cdf" in conf.methods:
-        probs["cdf"] = columnar.staged_cdf_prob(conf)
-    if mc:
-        kernel = mc_probs_udf(conf, mc)
-        st = kernel(F.col("vec"), key_str)
-        for m in mc:
-            probs[m] = st.getField(m)
-    return staged, probs
+    if any(m in DETERMINISTIC for m in conf.methods):
+        staged = columnar.stage_stats(staged, carry, conf)
+    det = columnar.prob_sql(conf)
+    if not mc:
+        return staged.selectExpr(*carry, *columnar.aliased(det))
+    # the kernel's inputs and its struct's fields go through text
+    # projections too (a Column getField costs ~30 py4j calls); Catalyst
+    # folds them into their neighbours, so the Project stack around the
+    # ArrowEvalPython node is unchanged
+    withp = staged.selectExpr(*carry, *columnar.aliased(det), "vec",
+                              f"{key_str_sql(keys)} AS _mc_key")
+    names = [*carry, *det]
+    kernel = mc_probs_udf(conf, mc)(withp["vec"], withp["_mc_key"])
+    return withp.select(*[withp[c] for c in names], kernel.alias("_mc")) \
+        .selectExpr(*names, *[f"_mc.{m} AS _p_{m}" for m in mc])
 
 
 def detect(
@@ -197,16 +191,9 @@ def detect(
         df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
         horizon_anchor, skew_salts,
     )
-    staged, probs = _staged_probs(tails, keys, conf, key_str_col(keys))
-    # stage the raw per-test probs too: the combiner references each several
-    # times (cap, weight, numerator, denominator, gate)
-    withp = staged.select(
-        *keys, "n_points", "last_ts",
-        *[c.alias(f"_p_{m}") for m, c in probs.items()])
-    merged = merge_probs(
-        {m: F.col(f"_p_{m}") for m in probs}, conf.methods)
-    prob = combined_prob(merged, conf, F.col("n_points"))
-    return withp.select(*keys, "n_points", "last_ts", prob.alias("prob"))
+    prob = combined_sql(merged_sql(conf.methods), conf)
+    return _with_probs(tails, keys, conf).selectExpr(
+        *map(sql_ident, keys), "n_points", "last_ts", f"{prob} AS prob")
 
 
 def detect_multi(
@@ -266,19 +253,11 @@ def detect_by_test(
         df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
         horizon_anchor, skew_salts,
     )
-    staged, probs = _staged_probs(tails, keys, conf, key_str_col(keys))
-    withp = staged.select(
-        *keys, "n_points", "last_ts",
-        *[c.alias(f"_p_{m}") for m, c in probs.items()])
-    merged = merge_probs(
-        {m: F.col(f"_p_{m}") for m in probs}, conf.methods)
-    from .combine import weight_col
-
-    cols = [*keys, "n_points", "last_ts"]
+    merged = merged_sql(conf.methods)
+    cols = [*map(sql_ident, keys), "n_points", "last_ts"]
     for name, p in merged.items():
-        cols.append(p.alias(f"prob_{name}"))
-        cols.append(
-            F.when(p.isNotNull(), weight_col(name, p)).alias(f"weight_{name}")
-        )
-    cols.append(combined_prob(merged, conf, F.col("n_points")).alias("prob"))
-    return withp.select(*cols)
+        cols.append(f"{p} AS prob_{name}")
+        cols.append(f"CASE WHEN {p} IS NOT NULL THEN {weight_sql(name, p)} "
+                    f"END AS weight_{name}")
+    cols.append(f"{combined_sql(merged, conf)} AS prob")
+    return _with_probs(tails, keys, conf).selectExpr(*cols)

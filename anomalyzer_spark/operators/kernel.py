@@ -26,12 +26,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import oracle
 from ..config import AnomalyzerConf
+from .columnar import sql_ident
 
 MC_METHODS = ("diff", "highrank", "lowrank", "ks")
 
@@ -58,10 +58,11 @@ def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
                 v = np.asarray(vec, dtype=np.float64)
                 k = str(key)
                 # all requested tests' permutation matrices in ONE
-                # vectorized md5 batch — the md5 loop was ~65% of kernel
-                # CPU; LazyPerms defers the batch until the first test
-                # passes its window guard, so too-short vectors stay
-                # digest-free (oracle.perms_for_tests / LazyPerms)
+                # vectorized md5 batch — still ~63% of the kernel's CPU
+                # per key (0.61 of 0.97 ms at the default perm_count, all
+                # 4 MC tests, window 5); LazyPerms defers the batch until
+                # the first test passes its window guard, so too-short
+                # vectors stay digest-free (oracle.perms_for_tests)
                 perms = oracle.LazyPerms(conf, k, want, len(v))
                 for m in MC_METHODS:
                     if m not in want:
@@ -82,18 +83,19 @@ def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
     return _kernel
 
 
-def key_str_col(key_cols: list[str]) -> Column:
-    """'|'-joined key string — the per-key component of the permutation-hash
-    preimage. NULL key components become the sentinel 'None' (matching the
-    streaming path's Python ``str(None)``, detect_stream._merge_and_eval —
-    a NULL-keyed series must draw the same MC permutation stream in batch
-    and streaming; bare concat_ws would silently SKIP the component).
+def key_str_sql(key_cols: list[str]) -> str:
+    """SQL text of the '|'-joined key string — the per-key component of the
+    permutation-hash preimage. NULL key components become the sentinel
+    'None' (matching the streaming path's Python ``str(None)``,
+    detect_stream._merge_and_eval — a NULL-keyed series must draw the same
+    MC permutation stream in batch and streaming; bare concat_ws would
+    silently SKIP the component).
     DuckDB reproduces it with ``concat_ws('|', coalesce(k::VARCHAR,
     'None'), ...)``. Two documented-unsupported collisions: key values
     containing '|' can collide across multi-column keys, and a literal
     string key 'None' collides with a NULL key (both draw the identical MC
     permutation stream — forced by the streaming path's ``str(None)``, so
     it can only be documented, not avoided)."""
-    return F.concat_ws("|", *[
-        F.coalesce(F.col(k).cast("string"), F.lit("None")) for k in key_cols
-    ])
+    parts = ", ".join(f"coalesce(CAST({sql_ident(k)} AS STRING), 'None')"
+                      for k in key_cols)
+    return f"concat_ws('|', {parts})"

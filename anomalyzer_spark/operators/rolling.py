@@ -45,7 +45,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import AnomalyzerConf
-from .combine import combined_prob, merge_probs
+from . import columnar
+from .columnar import sql_ident
+from .combine import combined_sql, merged_sql
 
 ROLLING_METHODS = ("magnitude", "fence", "cdf")
 
@@ -106,69 +108,51 @@ def detect_rolling(
                          *keys, "__chunk")
         )
         wc = Window.partitionBy(*keys, "__chunk").orderBy(F.col("__rn").asc())
-        n_points, prob = _prob_exprs(wc, F.col(value_col).cast("double"), conf)
-        return (
+        stats = _frame_stats(wc, F.col(value_col).cast("double"), conf)
+        staged = (
             chunked.select(
                 *out_cols, (F.col("__chunk") == chunk0).alias("__real"),
-                n_points.alias("n_points"), prob.alias("prob"))
+                *[c.alias(n) for n, c in stats.items()])
             .where(F.col("__real")).drop("__real")
         )
+    else:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        stats = _frame_stats(w, F.col(value_col).cast("double"), conf)
+        staged = df.select(*out_cols, *[c.alias(n) for n, c in stats.items()])
 
-    w = Window.partitionBy(*keys).orderBy(*order)
-    n_points, prob = _prob_exprs(w, F.col(value_col).cast("double"), conf)
-    return df.select(
-        *out_cols, n_points.alias("n_points"), prob.alias("prob"))
+    # the same prob formulas and combiner text as detect(), staged the same
+    # way: each frame aggregate and per-test prob is computed once
+    carry = [*map(sql_ident, out_cols), "n_points"]
+    probs = columnar.aliased(columnar.prob_sql(conf))
+    prob = combined_sql(merged_sql(conf.methods), conf)
+    return (staged.selectExpr(*carry, *probs)
+            .selectExpr(*carry, f"{prob} AS prob"))
 
 
-def _prob_exprs(w: Window, v: Column, conf: AnomalyzerConf):
-    """(n_points, prob) frame expressions over an ordered per-key window.
+def _frame_stats(w: Window, v: Column, conf: AnomalyzerConf) -> dict:
+    """Frame aggregates under the stat names ``columnar.prob_sql`` reads,
+    plus ``n_points``, over an ordered per-key window.
 
     Every frame ends at the current row and reaches back at most a+r-1
     rows, so the caller may partition by (key) or (key, chunk) — the
     chunked caller guarantees the lookback rows exist (module docstring).
     """
     a, r = conf.active_size, conf.reference_size
-    w_all = w.rowsBetween(-(a + r - 1), 0)
-    w_act = w.rowsBetween(-(a - 1), 0)
     w_ref = w.rowsBetween(-(a + r - 1), -a)
-
-    probs: dict[str, Column] = {}
-    act_mean = F.avg(v).over(w_act)
-    ref_n = F.count(v).over(w_ref)
-    ref_mean = F.avg(v).over(w_ref)
-
-    if "fence" in conf.methods:
-        if conf.lower_bound is None:
-            distance = act_mean / F.lit(float(conf.upper_bound))
-        else:
-            half = (conf.upper_bound - conf.lower_bound) / 2.0
-            mid = conf.lower_bound + half
-            distance = F.abs(act_mean - F.lit(mid)) / F.lit(half)
-        capped = F.greatest(F.least(distance, F.lit(1.0)), F.lit(0.0))
-        probs["fence"] = (F.pow(F.lit(10.0), capped) - 1.0) / 9.0
-
-    if "magnitude" in conf.methods:
-        probs["magnitude"] = F.when(ref_n < 1, F.lit(None).cast("double")).otherwise(
-            F.when(ref_mean == 0.0,
-                   F.when(act_mean == 0.0, 0.0).otherwise(1.0))
-            .otherwise(F.abs(act_mean - ref_mean) / ref_mean)
-        )
-
+    stats = {
+        "n_points": F.count(v).over(w.rowsBetween(-(a + r - 1), 0)),
+        "_cx_act_mean": F.avg(v).over(w.rowsBetween(-(a - 1), 0)),
+        "_cx_ref_mean": F.avg(v).over(w_ref),
+        "_cx_ref_n": F.count(v).over(w_ref),
+    }
     if "cdf" in conf.methods:
         # |first difference| stream, then frames of sizes (a, r-1) over it
         d = F.abs(v - F.lag(v, 1).over(w))
-        wd_act = w.rowsBetween(-(a - 1), 0)
         wd_ref = w.rowsBetween(-(a + (r - 1) - 1), -a)
-        dact_mean = F.avg(d).over(wd_act)
-        dref_mean = F.avg(d).over(wd_ref)
-        dref_n = F.count(d).over(wd_ref)
-        dref_arr = F.collect_list(d).over(wd_ref)
-        q = dact_mean - dref_mean
-        pct = F.size(F.filter(dref_arr, lambda x: x <= q)) / dref_n
-        probs["cdf"] = F.when(dref_n < a, F.lit(None).cast("double")).otherwise(
-            2.0 * F.abs(F.lit(0.5) - pct))
-
-    merged = merge_probs(probs, conf.methods)
-    n_points = F.count(v).over(w_all)
-    prob = combined_prob(merged, conf, n_points)
-    return n_points, prob
+        stats.update({
+            "_cx_dact_mean": F.avg(d).over(w.rowsBetween(-(a - 1), 0)),
+            "_cx_dref_mean": F.avg(d).over(wd_ref),
+            "_cx_dref_n": F.count(d).over(wd_ref),
+            "_cx_dref": F.collect_list(d).over(wd_ref),
+        })
+    return stats

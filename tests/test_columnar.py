@@ -1,9 +1,8 @@
-"""Pure-column test expressions must match the NumPy oracle exactly
-(same doubles — both sides use identical formulas)."""
+"""The SQL stage expressions detect() runs must match the NumPy oracle
+exactly (same doubles — both sides use identical formulas)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from anomalyzer_spark import oracle
 from anomalyzer_spark.config import AnomalyzerConf
@@ -38,17 +37,11 @@ def _spark_probs_all(spark, vecs, conf):
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "i: int, vec: array<double>",
     )
-    s = columnar.WindowSlices(F.col("vec"), conf)
-    cols = {}
-    if "fence" in conf.methods:
-        cols["fence"] = columnar.fence_prob(s)
-    cols["magnitude"] = columnar.magnitude_prob(s)
-    if "cdf" in conf.methods:
-        cols["cdf"] = columnar.cdf_prob(s)
-    if "ks" in conf.methods:
-        cols["ks_stat"] = columnar.ks_stat_col(s)
-    rows = df.select("i", *[c.alias(k) for k, c in cols.items()]).collect()
-    return {r["i"]: r.asDict() for r in rows}
+    staged = columnar.stage_stats(df, ["i"], conf)
+    rows = staged.selectExpr(
+        "i", *columnar.aliased(columnar.prob_sql(conf))).collect()
+    return {r["i"]: {k.removeprefix("_p_"): v for k, v in r.asDict().items()}
+            for r in rows}
 
 
 @pytest.mark.parametrize("conf", CONFS)
@@ -71,9 +64,3 @@ def test_columnar_matches_oracle(spark, conf):
                 assert got["cdf"] is None, (vec, "cdf")
             else:
                 assert got["cdf"] == pytest.approx(exp, abs=1e-12), (vec, "cdf")
-        if "ks" in conf.methods:
-            exp = oracle.ks_stat(v, conf)
-            if exp is None:
-                assert got["ks_stat"] is None, (vec, "ks_stat")
-            else:
-                assert got["ks_stat"] == pytest.approx(exp, abs=1e-12), (vec, "ks_stat")

@@ -33,7 +33,6 @@ def test_guard_skips_unchanged_archive(tmp_path, monkeypatch):
     calls = []
     monkeypatch.setattr(_daemon, "_orig_invalidate",
                         lambda self: calls.append(self.archive))
-    monkeypatch.setattr(_daemon, "_seen", {})
 
     # first call: unseen archive -> delegates (re-read happens once)
     _daemon._invalidate_caches(zi)
@@ -52,7 +51,6 @@ def test_guard_invalidates_modified_archive(tmp_path, monkeypatch):
     calls = []
     monkeypatch.setattr(_daemon, "_orig_invalidate",
                         lambda self: calls.append(self.archive))
-    monkeypatch.setattr(_daemon, "_seen", {})
 
     _daemon._invalidate_caches(zi)
     _make_zip(zpath, b"two-with-longer-payload")  # size + mtime change
@@ -63,6 +61,29 @@ def test_guard_invalidates_modified_archive(tmp_path, monkeypatch):
     os.unlink(zpath)
     _daemon._invalidate_caches(zi)
     assert calls == [zpath, zpath, zpath]
+
+
+def test_guard_invalidates_every_importer_of_rewritten_archive(
+        tmp_path, monkeypatch):
+    """A worker holds one zipimporter per package path inside an archive;
+    after a rewrite EACH of them must re-read its own cached directory,
+    not just the first one to see the new (mtime_ns, size)."""
+    zpath = str(tmp_path / "pkg.zip")
+    _make_zip(zpath, b"one")
+    first, second = zipimport.zipimporter(zpath), zipimport.zipimporter(zpath)
+
+    calls = []
+    monkeypatch.setattr(_daemon, "_orig_invalidate",
+                        lambda self: calls.append(self))
+    for zi in (first, second):
+        _daemon._invalidate_caches(zi)
+    _make_zip(zpath, b"two-with-longer-payload")
+    for zi in (first, second):
+        _daemon._invalidate_caches(zi)
+    assert calls == [first, second, first, second]
+    for zi in (first, second):  # and both stay quiet while it is unchanged
+        _daemon._invalidate_caches(zi)
+    assert len(calls) == 4
 
 
 def test_guard_preserves_reload_semantics(tmp_path):

@@ -205,62 +205,80 @@ def test_perm_spec_validated():
 # --- vectorized md5 permutation path (_md5vec) -----------------------------
 
 def test_md5vec_matches_hashlib_across_lengths():
-    """md5_rows is byte-identical to hashlib for message lengths spanning
-    the 1-block/2-block/3-block padding boundaries, mixed in one batch."""
+    """perm_digest_batch is byte-identical to hashlib for message lengths
+    spanning the 1-block/2-block/3-block padding boundaries: prefixes of
+    15 lengths in one call, and 3- to 4-byte ``r|j`` tails that put one
+    template's rows on both sides of a boundary."""
     import hashlib
 
     from anomalyzer_spark import _md5vec
 
     rng = np.random.default_rng(7)
-    lengths = [0, 1, 7, 54, 55, 56, 63, 64, 65, 118, 119, 120, 127, 128, 200]
-    msgs = [bytes(rng.integers(0, 256, size=n, dtype=np.uint8))
-            for n in lengths]
-    width = max(lengths) + 1
-    data = np.zeros((len(msgs), width), dtype=np.uint8)
-    lens = np.array([len(m) for m in msgs], dtype=np.int64)
-    for i, m in enumerate(msgs):
-        data[i, : len(m)] = np.frombuffer(m, dtype=np.uint8)
-    got = _md5vec.md5_rows(data, lens)
-    want = np.array([hashlib.md5(m).digest() for m in msgs], dtype="S16")
+    plens = [0, 1, 4, 51, 52, 53, 60, 61, 62, 115, 116, 117, 124, 125, 197]
+    prefixes = [bytes(rng.integers(0, 256, size=n, dtype=np.uint8))
+                for n in plens]
+    got = _md5vec.perm_digest_batch(prefixes, 10, 12)
+    want = np.array([[[hashlib.md5(pre + f"{r}|{j}".encode()).digest()
+                       for j in range(12)] for r in range(10)]
+                     for pre in prefixes], dtype="S16")
     assert (got == want).all()
-    ref = _md5vec._md5_rows_hashlib(data, lens)
+    ref = _md5vec._digests_hashlib(prefixes, 10, 12)
     assert (got == ref).all()
 
 
 def test_md5vec_accepts_overwide_padded_matrix():
-    """A matrix padded wider than the batch-max padded block size (all
-    rows short, width 200 → one 64-byte block) must still hash correctly:
-    the dead columns are trimmed, not broadcast into the block buffer."""
+    """The cached ``r|j`` tails are zero-padded to the widest one
+    ('999|11'); a shorter row ('0|0') must still hash at its own length,
+    and a short prefix's template, built from the same cached tails after
+    a 3-block prefix's, must not inherit that prefix's block count."""
     import hashlib
 
     from anomalyzer_spark import _md5vec
 
-    data = np.zeros((3, 200), dtype=np.uint8)
-    msgs = [b"abc", b"", b"0123456789"]
-    for i, m in enumerate(msgs):
-        data[i, : len(m)] = np.frombuffer(m, dtype=np.uint8)
-    lens = np.array([len(m) for m in msgs], dtype=np.int64)
-    got = _md5vec.md5_rows(data, lens)
-    want = np.array([hashlib.md5(m).digest() for m in msgs], dtype="S16")
-    assert (got == want).all()
+    for pre in (b"L" * 150, b"abc", b"m" * 50):
+        got = _md5vec.perm_digest_batch([pre], 1000, 12)
+        want = np.array([[hashlib.md5(pre + f"{r}|{j}".encode()).digest()
+                          for j in range(12)] for r in range(1000)],
+                        dtype="S16")
+        assert (got[0] == want).all(), len(pre)
 
 
-def test_perm_matrix_identical_to_hashlib_loop():
-    """The vectorized hash-spec perm matrix equals the original hashlib
-    digest loop exactly — same argsort input ordering, same stable ties."""
+def test_perm_matrix_identical_to_hashlib_loop(monkeypatch):
+    """The vectorized hash-spec digests and perm matrices equal the
+    original hashlib digest loop exactly — same bytes, same argsort input
+    ordering, same stable ties — for every test's prefix in one batch,
+    plus a prefix of another length in the same batch; and the big-endian
+    fallback (``_LITTLE`` False) gives the same."""
     import hashlib
 
-    for key in ("k1", "user|with|pipes", "x" * 80):  # 80-char key → 2 blocks
-        for (P, n) in ((50, 12), (20, 5), (7, 33)):
-            got = oracle.perm_matrix(42, key, "ks", P, n)
-            digests = np.empty((P, n), dtype="<U32")
-            for r in range(P):
-                pre = f"42|{key}|4|{r}|".encode()
-                for j in range(n):
-                    digests[r, j] = hashlib.md5(
-                        pre + str(j).encode()).hexdigest()
-            want = np.argsort(digests, axis=1, kind="stable")
-            assert (got == want).all(), (key, P, n)
+    from anomalyzer_spark import _md5vec
+
+    tests = tuple(oracle._TEST_ID)
+    cases = [
+        ("k1", 50, 12), ("user|with|pipes", 20, 5),
+        ("x" * 80, 7, 33),  # 80-char key → 2 blocks
+        # key lengths 1 / 40 / 50 / 120 put the prefix on both sides of
+        # the one-/two-block boundary (a 45-char key straddles it inside
+        # one batch); r and j run to 1, 2 and 3 digits
+        ("k", 1, 1), ("k", 10, 5), ("k", 1000, 101), ("a" * 40, 500, 12),
+        ("b" * 45, 10, 101), ("c" * 50, 1000, 5), ("d" * 120, 10, 12),
+    ]
+    for key, P, n in cases:
+        prefixes = [f"42|{key}|{oracle._TEST_ID[t]}|".encode() for t in tests]
+        prefixes.append(f"7|{key}z|2|".encode())
+        want = np.array([[[hashlib.md5(pre + f"{r}|{j}".encode()).digest()
+                           for j in range(n)] for r in range(P)]
+                         for pre in prefixes], dtype="S16")
+        hexes = np.vectorize(bytes.hex, otypes=["U32"])(want)
+        for little in (True, False):
+            monkeypatch.setattr(_md5vec, "_LITTLE", little)
+            got = _md5vec.perm_digest_batch(prefixes, P, n)
+            assert (got == want).all(), (key, P, n, little)
+            mats = oracle.perm_matrices(42, key, tests, P, n)
+            for i, t in enumerate(tests):
+                assert (mats[t] == np.argsort(hexes[i], axis=1,
+                                              kind="stable")).all(), \
+                    (key, P, n, little, t)
 
 
 def test_perm_matrices_batch_equals_single():

@@ -27,6 +27,40 @@ def test_detect_single_shuffle_with_maplocal_tail(spark, sf_dir):
         plan.count("WindowGroupLimit") >= 2
 
 
+def test_detect_plan_build_py4j_budget(spark, sf_dir, monkeypatch):
+    """Building detect()'s plan on the Monte-Carlo conf (all seven tests)
+    sends a few hundred py4j commands, not the ~3,080 of per-node Column
+    trees: every staged projection is one SQL-text selectExpr. The bound
+    is a tenth of that; py4j's garbage-collection commands for freed
+    Java objects add a little noise below it, so earlier tests' garbage
+    is collected first and the cycle collector paused while counting."""
+    import gc
+
+    from anomalyzer_spark.config import SUPPORTED_METHODS
+
+    conf = AnomalyzerConf(methods=SUPPORTED_METHODS, upper_bound=120.0,
+                          lower_bound=80.0)
+    ev = load_table(spark, sf_dir, "events")
+    detect(ev, ["event_type"], "ts", "value", conf,
+           tiebreak_cols=["event_id"])  # one-time lookups stay out
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    orig = client.send_command
+    monkeypatch.setattr(client, "send_command",
+                        lambda *a, **k: sent.append(1) or orig(*a, **k))
+    gc.collect()
+    sent.clear()
+    gc.disable()
+    try:
+        detect(ev, ["event_type"], "ts", "value", conf,
+               tiebreak_cols=["event_id"])
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    assert len(sent) <= 308, len(sent)
+
+
 def test_detect_scan_prunes_columns(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     df = detect(ev.where(F.col("event_type") == "error"),
